@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 
@@ -110,15 +109,6 @@ object Bench {
         .map(_.getUsage.getUsed).sum >> 20
     } catch { case _: Throwable => -1L }
 
-  /** Whole-tmpfs fill of /dev/shm in MB (statfs — O(1); measures the
-    * host view, which is what matters: other tenants' fill slows our
-    * writes too). -1 when unavailable. */
-  private def shmUsedMb(): Long =
-    try {
-      val fs = Files.getFileStore(Paths.get("/dev/shm"))
-      (fs.getTotalSpace - fs.getUsableSpace) >> 20
-    } catch { case _: Throwable => -1L }
-
   /** Round to `dp` decimals, drop trailing zeros ("2.100" -> "2.1"). */
   private def fmt(v: Double, dp: Int): String = {
     val bd = new java.math.BigDecimal(v)
@@ -129,56 +119,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt
     // Total wall budget: a full pass beyond this is skipped; the
     // mandatory second pass and suspect re-runs stop AT it.
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "1500").toDouble
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      // Spark's generated-class cache holds 100 entries (static conf,
-      // spark.sql.codegen.cache.maxEntries). One bench pass compiles
-      // a multiple of that across 360+ queries, so by the time pass 2
-      // reaches a query its classes are evicted and EVERY SAMPLE pays
-      // janino compile + fresh JIT again (measured r14: rrf1 8.0 s on
-      // both passes vs 1.4 s with warm code — the cost is compilation,
-      // not data). Sizing the cache to the surface makes pass 2+ and
-      // the dispersion re-runs measure the QUERY, not the compiler.
-      // This caches compiled code keyed on generated source — results
-      // are still computed from parquet on every invocation. Same
-      // knob a long-lived production driver (Thrift server) would set.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
-      // Stopped streaming queries' state-store providers hold their
-      // last-version maps until the maintenance thread notices the
-      // query is gone; with ~25 streaming replays per pass, the
-      // default 60 s sweep lets tens of store instances linger —
-      // sweep more often so their memory returns promptly.
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "15s")
-    // Shuffle/spill files on tmpfs when available: at bench scale they are
-    // small, and it removes disk-contention noise from a shared machine
-    // (round-1 driver runs saw 8-37x inflation consistent with slow /tmp).
-    val shm = Paths.get("/dev/shm")
-    if (Files.isWritable(shm)) {
-      val local = shm.resolve("graft_spark_local")
-      Files.createDirectories(local)
-      builder.config("spark.local.dir", local.toString)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The inter-query cleanup below unpersists locally-checkpointed
-    // RDDs that are finished by design; Spark warns per RDD, and
-    // thousands of stderr lines risk interleaving into the driver's
-    // bounded output capture around the final JSON line.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Session.build(cpus)
     // Warm the JVM once on the smallest SF (codegen compilation, parquet
     // reader, shuffle + streaming machinery) so first-query JIT cost
     // doesn't land on an arbitrary query's timing.
@@ -213,9 +160,7 @@ object Bench {
           s"[bench] WARM-UP entry $n no longer registered")
       }
     }
-    // Optional comma-separated filter for iterating on specific queries.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
+    val only = Session.only
     // Bench-scoped workload substitutions (explicit parameter, not a
     // JVM-global flag): the override map swaps a handful of
     // fixture-heavy entries (d15 store rebuild, t39 planted corpus)
@@ -226,35 +171,9 @@ object Bench {
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .toSeq.sortBy(_._1)
     val overridden = selected.map(_._1).filter(overrides.contains)
-    // Post-query litter sweep (runs OUTSIDE every timed window).
-    // clearCache/unpersist release the finished query's frames, but
-    // BROADCASTS and SHUFFLE FILES are freed only when the weak-ref
-    // ContextCleaner sees them collected — and spark.local.dir sits on
-    // /dev/shm, so hundreds of queries' shuffle litter accumulates IN
-    // RAM until a full GC happens to run (observed: mid-alphabet
-    // queries 2-3x their solo times with disp ~1, both passes agreeing
-    // — contamination, not variance). A time-throttled System.gc()
-    // gives the cleaner its collection point at a bounded (~1/min,
-    // untimed) cost instead of waiting for heap pressure.
-    var lastGcNs = System.nanoTime()
-    // /dev/shm watermark: above this fill the throttle is bypassed —
-    // tmpfs shuffle litter is RAM the ContextCleaner can only return
-    // after a collection, and letting it ride to heap pressure is
-    // exactly the residual pass-2 contamination pattern (round-14)
-    val shmGcMb =
-      sys.env.getOrElse("SPARK_GRAFT_SHM_GC_MB", "4096").toLong
-    def sweep(): Unit = {
-      try {
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        if (System.nanoTime() - lastGcNs > 60e9.toLong ||
-            shmUsedMb() > shmGcMb) {
-          System.gc()
-          lastGcNs = System.nanoTime()
-        }
-      } catch { case _: Throwable => () }
-    }
+    // Post-query litter sweep (see Session.sweeper), outside every
+    // timed window.
+    val sweep = Session.sweeper(spark)
     // per query: every timed sample with its forensic context
     val samples = mutable.LinkedHashMap[String, List[Sample]]()
     selected.foreach { case (n, _) => samples(n) = Nil }
@@ -294,9 +213,10 @@ object Bench {
           val q0 = System.nanoTime()
           try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
           ran += ((name, (System.nanoTime() - q0) / 1e9,
-            gcMillis() - g0, shmUsedMb(), codeCacheUsedMb()))
+            gcMillis() - g0, Session.shmUsedMb(), codeCacheUsedMb()))
           // Outside the timed window: drop the finished query's
-          // leavings (see sweep() for why the GC point is load-bearing).
+          // leavings (see Session.sweeper for why the GC point is
+          // load-bearing).
           sweep()
         }
       }
@@ -359,8 +279,8 @@ object Bench {
             try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
             val t = (System.nanoTime() - q0) / 1e9
             samples(name) = samples(name) :+
-              Sample(t, stealSince(s0), gcMillis() - g0, shmUsedMb(),
-                codeCacheUsedMb())
+              Sample(t, stealSince(s0), gcMillis() - g0,
+                Session.shmUsedMb(), codeCacheUsedMb())
             reruns += 1
             // same post-query litter sweep as the pass loop: a re-run
             // exists to REPLACE a contaminated sample, so it must not

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints formatted physical plans for headline
   * queries so shuffle counts / pushdown / broadcast choices can be
   * reviewed (SCALE.md evidence). Not part of the driver contract. */
@@ -102,13 +100,9 @@ object Explain {
         // round-14 additions
         "g17hp_registers_portable", "g18hp_ballsums_portable",
         "g1_pagerank")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .getOrCreate()
+    // 4 cores, as the committed EXPLAIN.md was generated: partition
+    // counts appear in the plans
+    val spark = Session.build("4")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

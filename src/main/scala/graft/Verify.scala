@@ -1,45 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // testdata events.ts is TIMESTAMP(NANOS); read as long nanos
-      // (EventsAdapter converts to µs timestamps losslessly)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      // size the generated-class cache to the query surface — the
-      // default 100 entries thrash across 340+ queries (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
-    // Shuffle/spill on tmpfs when available (see Bench for rationale).
-    val shm = Paths.get("/dev/shm")
-    if (Files.isWritable(shm)) {
-      val local = shm.resolve("graft_spark_local")
-      Files.createDirectories(local)
-      builder.config("spark.local.dir", local.toString)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // inter-query unpersist of finished localCheckpoint RDDs is
-    // intentional — silence the per-RDD warning (see Bench)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Session.build()
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated filter for iterating on specific queries
-    // (driver never sets it — its runs always dump the full surface).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    var lastGcNs = System.nanoTime()
+    // unset for a full correctness run, which dumps the whole surface
+    val only = Session.only
+    val sweep = Session.sweeper(spark)
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>
@@ -50,20 +20,8 @@ object Verify {
       }
       // Drop the finished query's persisted/checkpointed blocks —
       // nothing references them once the write returns, and across
-      // ~340 queries they otherwise pile up in the block manager
-      // (same hygiene as Bench's inter-query cleanup). The throttled
-      // System.gc() is the ContextCleaner's collection point: without
-      // it, broadcasts and /dev/shm shuffle files (RAM!) accumulate
-      // until heap pressure happens to trigger a full GC.
-      try {
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        if (System.nanoTime() - lastGcNs > 60e9.toLong) {
-          System.gc()
-          lastGcNs = System.nanoTime()
-        }
-      } catch { case _: Throwable => () }
+      // ~340 queries they otherwise pile up (see Session.sweeper).
+      sweep()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -25,10 +25,9 @@ object Hits {
     * sf0.1: g9 3.79→4.57 s WITH broadcast on a ~600k-row edge frame);
     * above it the per-round edge shuffle dominates (measured r15 at
     * sf1: 18.8→13.0 s with broadcast on a ~6M-row frame, shuffle
-    * 450→223 MB). Default sits between the two measured regimes;
-    * env-overridable like the partition target. */
-  private val BcastEdgeRows =
-    sys.env.getOrElse("SPARK_GRAFT_BCAST_EDGE_ROWS", "2000000").toLong
+    * 450→223 MB). The threshold sits between the two measured
+    * regimes. */
+  private val BcastEdgeRows = 2000000L
 
   def run(edges: DataFrame, rounds: Int = 3): DataFrame =
     run(edges, rounds, BcastEdgeRows)

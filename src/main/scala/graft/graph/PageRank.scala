@@ -66,16 +66,15 @@ object PageRank {
     * this every iteration re-scans the cache as that many tasks (64
     * observed at bench scale, ~50 ms scheduling+JIT floor each). The
     * per-partition row target balances task-scheduling overhead against
-    * per-task join/aggregate compute (~1 µs/row ⇒ ~250 ms/task at the
-    * default); 2M-row partitions measured SLOWER at bench scale (g9
-    * 3.0→4.8 s — the per-round join serialized onto one core). At 100×
-    * the same formula yields thousands of partitions. */
-  private[graft] def edgePartitions(edgeRows: Long): Int = {
-    val perPart = sys.env.getOrElse("SPARK_GRAFT_EDGE_ROWS_PER_PART",
-      "250000").toLong
-    math.min(math.max((edgeRows + perPart - 1) / perPart, 1L),
-      1 << 18).toInt
-  }
+    * per-task join/aggregate compute (~1 µs/row ⇒ ~250 ms/task at
+    * [[EdgeRowsPerPart]]); 2M-row partitions measured SLOWER at bench
+    * scale (g9 3.0→4.8 s — the per-round join serialized onto one
+    * core). At 100× the same formula yields thousands of partitions. */
+  private[graft] def edgePartitions(edgeRows: Long): Int =
+    math.min(math.max((edgeRows + EdgeRowsPerPart - 1) / EdgeRowsPerPart,
+      1L), 1 << 18).toInt
+
+  private val EdgeRowsPerPart = 250000L
 
   /** Coalesce `df` down to `target` partitions iff that is actually a
     * reduction (coalesce with a larger target is a planner no-op but

@@ -62,7 +62,9 @@ object Pca {
       array(lit(1000000L)),
       transform(col(vecCol),
         x => round(x.cast("double") * lit(1000000)).cast("long")))
-    val sp = emb
+    // A NULL vector is not a point: both engines drop it before the
+    // moments, so it counts toward neither n nor any sum.
+    val sp = emb.filter(col(vecCol).isNotNull)
       .select(uarr.as("ua"))
       .select(col("ua"), posexplode(col("ua")))
       .select(col("pos").as("i"), col("col").as("u"),
@@ -136,9 +138,10 @@ object Pca {
          |      AS BIGINT) AS u
          |  FROM embeddings CROSS JOIN
          |    unnest(range(1, ${dims + 1})) AS t(i)
+         |  WHERE embedding IS NOT NULL
          |  UNION ALL
          |  SELECT vec_id AS vid, 0 AS i, CAST(1000000 AS BIGINT) AS u
-         |  FROM embeddings),
+         |  FROM embeddings WHERE embedding IS NOT NULL),
          |sp AS MATERIALIZED (SELECT a.i, b.i AS j,
          |    sum(CAST(a.u * b.u AS DECIMAL(38,0))) AS sij
          |  FROM x a JOIN x b ON a.vid = b.vid GROUP BY 1, 2),

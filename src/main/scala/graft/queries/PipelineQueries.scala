@@ -10,10 +10,10 @@ import graft.etl.{Bronze, EventsAdapter, Gold, Silver}
   *
   * Output canonicalization for the oracle compare: the Gold parallel
   * arrays are emitted as deterministic joined strings — parameters sorted,
-  * values formatted %.4f and sorted by (parameter, value) — because raw
-  * double→string casts differ across engines and collect_list order is
-  * nondeterministic (SURVEY.md §2.10-2). Library consumers get real arrays
-  * from [[graft.etl.Gold.fromSilver]].
+  * values at 4 decimals ([[fixed4Sql]]) and sorted by (parameter, value)
+  * — because raw double→string casts differ across engines and
+  * collect_list order is nondeterministic (SURVEY.md §2.10-2). Library
+  * consumers get real arrays from [[graft.etl.Gold.fromSilver]].
   */
 object PipelineQueries {
 
@@ -72,6 +72,17 @@ object PipelineQueries {
       s"silver AS (${Silver.sqlFromBronze}), " +
       s"gold AS ($goldSql) " + body
 
+  /** DOUBLE `v` as text with exactly 4 decimals, by one rule that Spark
+    * and DuckDB evaluate bit-identically: half-up (toward +∞) on the
+    * IEEE product v·10⁴ — double multiply, add and floor round the same
+    * way in both engines — then exact DECIMAL scaling. Formatting the
+    * double directly does not agree on inexact ties: Spark's
+    * format_string rounds Java's shortest decimal form half-up, DuckDB's
+    * printf rounds the exact binary value (0.02445 → 0.0245 vs 0.0244). */
+  private[queries] def fixed4Sql(v: String): String =
+    s"CAST(CAST(floor($v * CAST('10000' AS DOUBLE) + CAST('0.5' AS DOUBLE))" +
+      " AS DECIMAL(20,0)) * CAST('0.0001' AS DECIMAL(5,4)) AS STRING)"
+
   /** Spark-side canonical string form of the Gold arrays. */
   def goldCanonical(g: DataFrame): DataFrame =
     g.select(
@@ -79,17 +90,18 @@ object PipelineQueries {
       col("country"), col("latitude"), col("longitude"),
       col("year"), col("month"), col("day"), col("aqi"),
       array_join(col("parameters"), ",").as("parameters"),
-      array_join(transform(col("values"), v => format_string("%.4f", v)), ",")
+      expr(s"array_join(transform(`values`, v -> ${fixed4Sql("v")}), ',')")
         .as("values"),
       col("aqi_category"))
       .orderBy("location_id", "datetime")
 
-  private val goldCanonicalSql: String =
-    """SELECT datetime, location_id, location_name, country, latitude,
+  /** DuckDB twin of [[goldCanonical]] over a `gold` relation. */
+  private[queries] val goldCanonicalSql: String =
+    s"""SELECT datetime, location_id, location_name, country, latitude,
       |  longitude, year, month, day, aqi,
       |  array_to_string(parameters, ',') AS parameters,
-      |  array_to_string(list_transform("values", v -> printf('%.4f', v)), ',')
-      |    AS "values",
+      |  array_to_string(list_transform("values", v -> ${fixed4Sql("v")}),
+      |    ',') AS "values",
       |  aqi_category
       |FROM gold
       |ORDER BY location_id, datetime""".stripMargin.replace('\n', ' ')

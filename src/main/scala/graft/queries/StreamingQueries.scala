@@ -533,19 +533,12 @@ object StreamingQueries {
     // stateless query). The harness row summarizes all three sinks
     // (rows + integer checksum) so the driver oracle certifies the
     // fan-out end to end: every sink complete, nothing duplicated.
-    "s18_fanout_sinks" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val scratch = StreamPipeline.scratchRoot()
-      val run = scratch.resolve(s"graft_fanout_${java.util.UUID
-        .randomUUID().toString.take(8)}")
-      val (rawDir, clickDir, hourDir) = (run.resolve("raw").toString,
-        run.resolve("clicks").toString, run.resolve("hourly").toString)
-      val key = "spark.sql.shuffle.partitions"
-      val saved = s.conf.get(key)
-      s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
-      try {
+    "s18_fanout_sinks" -> ((s, d) =>
+      StreamPipeline.drain(s, "graft_fanout") { run =>
+        val (rawDir, clickDir, hourDir) = (run.resolve("raw").toString,
+          run.resolve("clicks").toString, run.resolve("hourly").toString)
         val ev = fullEventsStream(s, d)
-        val fan = ev.writeStream
+        StreamPipeline.awaitAvailableNow(ev.writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val b = batch.persist()
             b.select(col("event_id"), col("user_id"), col("event_type"))
@@ -554,23 +547,16 @@ object StreamingQueries {
               .select(col("event_id"), col("user_id"))
               .write.mode("append").parquet(clickDir)
             b.unpersist(); ()
-          }
-          .option("checkpointLocation",
-            run.resolve("ckpt_fan").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        fan.awaitTermination()
+          }, run.resolve("ckpt_fan"))
         val hourly = ev
           .withColumn("hour", date_trunc("hour", col("ts")))
           .withWatermark("hour", "1 hour")
           .groupBy(col("hour"))
           .agg(count(lit(1)).as("n_events"))
-        val hq = hourly.writeStream.format("parquet")
+        StreamPipeline.awaitAvailableNow(hourly.writeStream
+          .format("parquet")
           .option("path", hourDir)
-          .option("checkpointLocation",
-            run.resolve("ckpt_hour").toString)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()).start()
-        hq.awaitTermination()
+          .outputMode("append"), run.resolve("ckpt_hour"))
         val raw = s.read.parquet(rawDir)
           .agg(count(lit(1)).as("n_rows"),
             sum(col("event_id")).as("checksum"))
@@ -587,11 +573,7 @@ object StreamingQueries {
             col("checksum"))
         raw.unionAll(clicks).unionAll(hours).orderBy("sink")
           .localCheckpoint()
-      } finally {
-        s.conf.set(key, saved)
-        StreamPipeline.clearDir(run)
-      }
-    }),
+      }),
     // CHECKPOINT RECOVERY (T6): the same stateful hourly-count topology
     // run TWICE against one checkpoint — stage 1 sees only the first
     // (time-ordered) half of the corpus, stops, stage 2 restarts after
@@ -605,7 +587,6 @@ object StreamingQueries {
     // oracle is the plain batch count under the s5 watermark cutoff).
     "s19_checkpoint_recovery" -> ((s, d) => {
       import java.nio.file.{Files, Paths}
-      import org.apache.spark.sql.streaming.Trigger
       val scratch = StreamPipeline.scratchRoot()
       // halves built once per sf dir behind a _done marker; the key
       // includes the source file's size+mtime so a regenerated events
@@ -633,35 +614,25 @@ object StreamingQueries {
           .write.mode("overwrite").parquet(prep.resolve("h1").toString)
         Files.createFile(prep.resolve("_done"))
       }
-      val run = scratch.resolve(s"graft_recovery_${java.util.UUID
-        .randomUUID().toString.take(8)}")
-      val srcDir = run.resolve("src"); Files.createDirectories(srcDir)
-      val sinkDir = run.resolve("sink").toString
-      val ckpt = run.resolve("ckpt").toString
       val sch = s.read.parquet(prep.resolve("h0").toString).schema
-      def addHalf(name: String): Unit = {
-        val half = prep.resolve(name)
-        Files.list(half).filter(_.toString.endsWith(".parquet"))
-          .forEach(f => Files.copy(f,
-            srcDir.resolve(s"${name}_${f.getFileName}")))
-      }
-      def runStage(): Unit = {
-        val q = s.readStream.schema(sch).parquet(srcDir.toString)
-          .withColumn("hour", date_trunc("hour", col("ts")))
-          .withWatermark("hour", "1 hour")
-          .groupBy(col("hour"), col("event_type"))
-          .agg(count(lit(1)).as("n_events"))
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      val key = "spark.sql.shuffle.partitions"
-      val saved = s.conf.get(key)
-      s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
-      try {
+      StreamPipeline.drain(s, "graft_recovery") { run =>
+        val srcDir = run.resolve("src"); Files.createDirectories(srcDir)
+        val sinkDir = run.resolve("sink").toString
+        def addHalf(name: String): Unit = {
+          val half = prep.resolve(name)
+          Files.list(half).filter(_.toString.endsWith(".parquet"))
+            .forEach(f => Files.copy(f,
+              srcDir.resolve(s"${name}_${f.getFileName}")))
+        }
+        def runStage(): Unit = StreamPipeline.awaitAvailableNow(
+          s.readStream.schema(sch).parquet(srcDir.toString)
+            .withColumn("hour", date_trunc("hour", col("ts")))
+            .withWatermark("hour", "1 hour")
+            .groupBy(col("hour"), col("event_type"))
+            .agg(count(lit(1)).as("n_events"))
+            .writeStream.format("parquet")
+            .option("path", sinkDir)
+            .outputMode("append"), run.resolve("ckpt"))
         addHalf("h0"); runStage()
         val afterStage1 = s.read.parquet(sinkDir).count()
         addHalf("h1"); runStage()
@@ -676,9 +647,6 @@ object StreamingQueries {
           .count() == out.count(),
           "a restarted checkpoint must never re-emit a finalized group")
         out.orderBy("hour", "event_type")
-      } finally {
-        s.conf.set(key, saved)
-        StreamPipeline.clearDir(run)
       }
     }),
     // stream-stream interval join: purchases attributed to a click by the
@@ -1356,14 +1324,7 @@ object StreamingQueries {
         s"gold AS (SELECT * FROM ($sgold) WHERE datetime <= " +
         "(SELECT date_trunc('hour', max(datetime)) - INTERVAL 1 HOUR " +
         "FROM silver WHERE aqi IS NOT NULL)) " +
-        """SELECT datetime, location_id, location_name, country, latitude,
-          |  longitude, year, month, day, aqi,
-          |  array_to_string(parameters, ',') AS parameters,
-          |  array_to_string(list_transform("values", v -> printf('%.4f', v)), ',')
-          |    AS "values",
-          |  aqi_category
-          |FROM gold
-          |ORDER BY location_id, datetime""".stripMargin.replace('\n', ' ')
+        PipelineQueries.goldCanonicalSql
     }
   )
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
@@ -48,10 +48,17 @@ object StreamPipeline {
     * Flag-gated by design: harness/default behavior is unchanged unless
     * a caller opts in. */
   def withStateStoreProvider[T](spark: SparkSession,
-      provider: String = RocksDbProviderClass)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
+      provider: String = RocksDbProviderClass)(body: => T): T =
+    withConf(spark, "spark.sql.streaming.stateStore.providerClass",
+      provider)(body)
+
+  /** Run `body` with session conf `key` set to `value`; the prior
+    * setting (or its absence) is restored after, also when `body`
+    * throws. */
+  private def withConf[T](spark: SparkSession, key: String,
+      value: String)(body: => T): T = {
     val saved = spark.conf.getOption(key)
-    spark.conf.set(key, provider)
+    spark.conf.set(key, value)
     try body finally saved match {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)
@@ -237,6 +244,42 @@ object StreamPipeline {
   private[graft] def clearDir(p: java.nio.file.Path): Unit =
     try deleteRecursively(p) catch { case _: Throwable => () }
 
+  /** Shuffle partitions a harness drain runs with (the reference does
+    * the same: 10 vs 2×cores for batch, stream_processor.py:64):
+    * state-store cost is per-partition-per-batch (one HDFS-backed store
+    * + delta file each), so 32 partitions for a few thousand keys is
+    * pure overhead. The number is fixed into a query's checkpoint at
+    * start, so restoring the session conf after the drain is safe. */
+  private[graft] val StreamParts = "8"
+
+  /** Harness drain scope: pins `shuffle.partitions` to [[StreamParts]]
+    * and hands `body` a fresh scratch directory `<tag>_<id>` under
+    * [[scratchRoot]] for its checkpoints (and any sinks); the setting
+    * is restored and the directory deleted after, also when `body`
+    * throws. Fresh directories make every drain re-entrant: a repeated
+    * bench pass never resumes old offsets. */
+  private[graft] def drain[T](spark: SparkSession, tag: String)(
+      body: java.nio.file.Path => T): T =
+    withConf(spark, "spark.sql.shuffle.partitions", StreamParts) {
+      val dir = scratchRoot().resolve(
+        s"${tag}_${java.util.UUID.randomUUID().toString.take(8)}")
+      try body(dir) finally clearDir(dir)
+    }
+
+  /** Start `writer` on AvailableNow with its checkpoint at `ckpt` and
+    * block until it has drained everything its source held at start. */
+  private[graft] def awaitAvailableNow(writer: DataStreamWriter[Row],
+      ckpt: java.nio.file.Path): Unit =
+    writer.option("checkpointLocation", ckpt.toString)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  /** Single-query drain: [[awaitAvailableNow]] inside a [[drain]] scope,
+    * checkpointing into the scope's directory; `writer` is built inside
+    * the scope. */
+  private[graft] def drainOnce(spark: SparkSession, tag: String)(
+      writer: => DataStreamWriter[Row]): Unit =
+    drain(spark, tag)(awaitAvailableNow(writer, _))
+
   private def deleteRecursively(p: java.nio.file.Path): Unit = {
     import java.nio.file.Files
     if (Files.exists(p)) {
@@ -298,33 +341,19 @@ object StreamPipeline {
         .sorted().toArray.lastOption.map(_.asInstanceOf[java.nio.file.Path])
       finally s.close()
     }
-    val ckpt = scratchRoot().resolve(
-      s"graft_ckpt_upsert_${java.util.UUID.randomUUID().toString.take(8)}")
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
-    try {
-      val q = changelog.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], batchId: Long) =>
-          val b = batch.toDF()
-          val merged = latestVersion(below = batchId) match {
-            case Some(cur) => Cdc.upsertLatest(
-              batch.sparkSession.read.parquet(cur.toString), b,
-              keyCols, payloadCols, ordCols)
-            case None => Cdc.compactLatest(b, keyCols, payloadCols, ordCols)
-          }
-          merged.write.mode("overwrite")
-            .parquet(root.resolve(f"v$batchId%06d").toString)
+    drainOnce(spark, "graft_ckpt_upsert")(changelog.writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
+          org.apache.spark.sql.Row], batchId: Long) =>
+        val b = batch.toDF()
+        val merged = latestVersion(below = batchId) match {
+          case Some(cur) => Cdc.upsertLatest(
+            batch.sparkSession.read.parquet(cur.toString), b,
+            keyCols, payloadCols, ordCols)
+          case None => Cdc.compactLatest(b, keyCols, payloadCols, ordCols)
         }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set(key, saved)
-      try deleteRecursively(ckpt) catch { case _: Throwable => () }
-    }
+        merged.write.mode("overwrite")
+          .parquet(root.resolve(f"v$batchId%06d").toString)
+      })
     latestVersion() match {
       case Some(p) => spark.read.parquet(p.toString)
       case None => spark.createDataFrame(
@@ -358,27 +387,13 @@ object StreamPipeline {
   def streamNearDupDedup(spark: SparkSession, docs: DataFrame,
       storeRoot: String): DataFrame = {
     import graft.dedup.NearDupIndexStore
-    val ckpt = scratchRoot().resolve(
-      s"graft_ckpt_snd_${java.util.UUID.randomUUID().toString.take(8)}")
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
-    try {
-      val q = docs.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], _: Long) =>
-          NearDupIndexStore.ingest(batch.sparkSession, storeRoot,
-            batch.toDF())
-          ()
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set(key, saved)
-      try deleteRecursively(ckpt) catch { case _: Throwable => () }
-    }
+    drainOnce(spark, "graft_ckpt_snd")(docs.writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
+          org.apache.spark.sql.Row], _: Long) =>
+        NearDupIndexStore.ingest(batch.sparkSession, storeRoot,
+          batch.toDF())
+        ()
+      })
     NearDupIndexStore.publishedTexts(spark, storeRoot)
   }
 
@@ -401,32 +416,18 @@ object StreamPipeline {
       root: String, rules: Seq[(String, org.apache.spark.sql.Column)],
       keyCols: Seq[String]): DataFrame = {
     import graft.io.Wap
-    val ckpt = scratchRoot().resolve(
-      s"graft_ckpt_swap_${java.util.UUID.randomUUID().toString.take(8)}")
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], _: Long) =>
-          val b = batch.toDF()
-          val acc =
-            if (Wap.versions(b.sparkSession, root).isEmpty) b
-            else Wap.readPublished(b.sparkSession, root)
-              .unionByName(b)
-              .dropDuplicates(keyCols)
-          Wap.publish(acc, root, rules)
-          ()
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set(key, saved)
-      try deleteRecursively(ckpt) catch { case _: Throwable => () }
-    }
+    drainOnce(spark, "graft_ckpt_swap")(stream.writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
+          org.apache.spark.sql.Row], _: Long) =>
+        val b = batch.toDF()
+        val acc =
+          if (Wap.versions(b.sparkSession, root).isEmpty) b
+          else Wap.readPublished(b.sparkSession, root)
+            .unionByName(b)
+            .dropDuplicates(keyCols)
+        Wap.publish(acc, root, rules)
+        ()
+      })
     Wap.readPublished(spark, root)
   }
 
@@ -450,35 +451,21 @@ object StreamPipeline {
       ref: DataFrame, binExpr: String, tagExpr: String,
       outRoot: String): DataFrame = {
     import graft.quality.Checks
-    val ckpt = scratchRoot().resolve(
-      s"graft_ckpt_sks_${java.util.UUID.randomUUID().toString.take(8)}")
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], _: Long) =>
-          val b = batch.toDF()
-          if (!b.isEmpty) {
-            val tag = b.agg(min(expr(tagExpr)).as("batch_tag"))
-            Checks.ksTest(ref, b, Seq("value" -> expr(binExpr)))
-              .crossJoin(broadcast(tag))
-              .select(col("batch_tag"), col("metric"), col("n_ref"),
-                col("n_cur"), col("d_e6"), col("crit_e6"),
-                col("drifted"))
-              .write.mode("append").parquet(outRoot)
-          }
-          ()
+    drainOnce(spark, "graft_ckpt_sks")(stream.writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
+          org.apache.spark.sql.Row], _: Long) =>
+        val b = batch.toDF()
+        if (!b.isEmpty) {
+          val tag = b.agg(min(expr(tagExpr)).as("batch_tag"))
+          Checks.ksTest(ref, b, Seq("value" -> expr(binExpr)))
+            .crossJoin(broadcast(tag))
+            .select(col("batch_tag"), col("metric"), col("n_ref"),
+              col("n_cur"), col("d_e6"), col("crit_e6"),
+              col("drifted"))
+            .write.mode("append").parquet(outRoot)
         }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set(key, saved)
-      try deleteRecursively(ckpt) catch { case _: Throwable => () }
-    }
+        ()
+      })
     // content-derived tags make a replayed batch's verdict row
     // byte-identical — the dedup turns at-least-once appends into
     // exactly-once verdicts (the x16 argument, one row per batch)
@@ -499,33 +486,19 @@ object StreamPipeline {
     * join + a doc-grain aggregate per batch. */
   def streamDsirGate(spark: SparkSession, stream: DataFrame,
       lambdaPath: String, buckets: Int, outRoot: String): DataFrame = {
-    val ckpt = scratchRoot().resolve(
-      s"graft_ckpt_sdsir_${java.util.UUID.randomUUID().toString.take(8)}")
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], _: Long) =>
-          val b = batch.toDF()
-          if (!b.isEmpty) {
-            val lam = spark.read.parquet(lambdaPath)
-            graft.text.Dsir.scoreWith(lam, b, buckets)
-              .select(col("doc_id"), col("n_feats"), col("weight"),
-                when(col("weight") > 0, 1L).otherwise(0L).as("kept"))
-              .write.mode("append").parquet(outRoot)
-          }
-          ()
+    drainOnce(spark, "graft_ckpt_sdsir")(stream.writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
+          org.apache.spark.sql.Row], _: Long) =>
+        val b = batch.toDF()
+        if (!b.isEmpty) {
+          val lam = spark.read.parquet(lambdaPath)
+          graft.text.Dsir.scoreWith(lam, b, buckets)
+            .select(col("doc_id"), col("n_feats"), col("weight"),
+              when(col("weight") > 0, 1L).otherwise(0L).as("kept"))
+            .write.mode("append").parquet(outRoot)
         }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set(key, saved)
-      try deleteRecursively(ckpt) catch { case _: Throwable => () }
-    }
+        ()
+      })
     spark.read.parquet(outRoot)
       .dropDuplicates(Seq("doc_id")).orderBy("doc_id")
   }
@@ -535,35 +508,15 @@ object StreamPipeline {
     * memory sink. Returns the materialized result table. Re-entrant: the
     * previous run's temp view is dropped and each run gets a fresh
     * checkpoint dir (deleted afterwards), so bench passes can repeat the
-    * same query without resuming old offsets.
-    *
-    * Streaming queries pin `shuffle.partitions` low for the duration of the
-    * replay (the reference does the same: 10 vs 2×cores for batch,
-    * stream_processor.py:64): state-store cost is per-partition-per-batch
-    * (one HDFS-backed store + delta file each), so 32 partitions for a few
-    * thousand keys is pure overhead. The number is fixed into the query's
-    * checkpoint at start, so restoring the session conf afterwards is safe. */
+    * same query without resuming old offsets. Runs with
+    * `shuffle.partitions` pinned low (see [[StreamParts]]). */
   def replayToMemory(spark: SparkSession, stream: DataFrame,
       name: String, outputMode: String = "append"): DataFrame = {
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
     spark.catalog.dropTempView(name)
-    val ckpt = scratchRoot().resolve(
-      s"graft_ckpt_${name}_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      val q = stream.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(outputMode)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set(key, saved)
-      try deleteRecursively(ckpt) catch { case _: Throwable => () }
-    }
+    drainOnce(spark, s"graft_ckpt_$name")(stream.writeStream
+      .format("memory")
+      .queryName(name)
+      .outputMode(outputMode))
     spark.table(name)
   }
 }

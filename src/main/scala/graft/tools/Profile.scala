@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Measurement harness for the optimization rounds (guide §1): times
@@ -15,47 +14,23 @@ import java.nio.file.{Files, Paths}
   * the judged artifact's source.
   *
   * Usage: Profile <sfDir> <reps> <name>[,<name>...]
-  *   SPARK_GRAFT_CPUS          cores (default 32, same as Bench)
+  *   SPARK_GRAFT_CPUS          cores (default 32, as for every main)
   *   SPARK_GRAFT_PLAN_DIR      if set, write <dir>/<name>.txt formatted plan
+  * Each rep prints its wall seconds with the jobs, stages, tasks, task
+  * time and shuffle bytes it ran.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args(2).split(',').map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
-    // experiment hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" applied last
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';')
-      .filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
-      })
-    val shm = Paths.get("/dev/shm")
-    if (Files.isWritable(shm)) {
-      val local = shm.resolve("graft_spark_local")
-      Files.createDirectories(local)
-      builder.config("spark.local.dir", local.toString)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = graft.Session.build()
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     planDir.foreach(d => Files.createDirectories(Paths.get(d)))
-    // Optional per-rep job attribution (guide §1.1 empirical loop,
-    // stand-in for the Stages tab in a UI-less sandbox): counts jobs
-    // and sums job wall / task time / shuffle bytes between reps, so a
-    // query's seconds decompose into "many small jobs" vs "few big".
-    val attrib = sys.env.get("SPARK_GRAFT_PROFILE_JOBS").contains("1")
+    // Per-rep job attribution (guide §1.1 empirical loop, stand-in for
+    // the Stages tab in a UI-less sandbox): counts jobs and sums job
+    // wall / task time / shuffle bytes between reps, so a query's
+    // seconds decompose into "many small jobs" vs "few big".
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val jobMs = new java.util.concurrent.atomic.AtomicLong
     val taskMs = new java.util.concurrent.atomic.AtomicLong
@@ -63,7 +38,7 @@ object Profile {
     val shufWrite = new java.util.concurrent.atomic.AtomicLong
     val tasks = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger
-    if (attrib) spark.sparkContext.addSparkListener(
+    spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         private val t0s = new java.util.concurrent.ConcurrentHashMap[
           Int, Long]()
@@ -76,18 +51,9 @@ object Profile {
           Option(t0s.remove(e.jobId)).foreach(t0 =>
             jobMs.addAndGet((System.nanoTime() - t0) / 1000000L))
         }
-        private val dumpStages =
-          sys.env.get("SPARK_GRAFT_PROFILE_STAGES").contains("1")
         override def onStageCompleted(
             e: org.apache.spark.scheduler
               .SparkListenerStageCompleted): Unit = {
-          if (dumpStages) {
-            val si = e.stageInfo
-            val ms = si.completionTime.getOrElse(0L) -
-              si.submissionTime.getOrElse(0L)
-            println(f"    stage ${si.stageId}%4d tasks=${si.numTasks}%3d " +
-              f"${ms}%5d ms ${si.name.take(90)}")
-          }
           stages.incrementAndGet()
           tasks.addAndGet(e.stageInfo.numTasks)
           taskMs.addAndGet(e.stageInfo.taskMetrics.executorRunTime)
@@ -98,16 +64,16 @@ object Profile {
         }
       })
     def snapAttrib(): String =
-      if (!attrib) "" else {
-        val s = f" jobs=${jobs.getAndSet(0)}%d" +
-          f" jobMs=${jobMs.getAndSet(0)}%d" +
-          f" stages=${stages.getAndSet(0)}%d" +
-          f" tasks=${tasks.getAndSet(0)}%d" +
-          f" taskMs=${taskMs.getAndSet(0)}%d" +
-          f" shufR=${shufRead.getAndSet(0) >> 10}%dK" +
-          f" shufW=${shufWrite.getAndSet(0) >> 10}%dK"
-        s
-      }
+      f" jobs=${jobs.getAndSet(0)}%d" +
+        f" jobMs=${jobMs.getAndSet(0)}%d" +
+        f" stages=${stages.getAndSet(0)}%d" +
+        f" tasks=${tasks.getAndSet(0)}%d" +
+        f" taskMs=${taskMs.getAndSet(0)}%d" +
+        f" shufR=${shufRead.getAndSet(0) >> 10}%dK" +
+        f" shufW=${shufWrite.getAndSet(0) >> 10}%dK"
+    // same inter-query hygiene as Bench: drop finished frames so a rep
+    // measures the query, not the previous rep's litter
+    val sweep = graft.Session.sweeper(spark)
     names.foreach { n =>
       val fn = SparkEntryLookup.queries(n)
       planDir.foreach { d =>
@@ -123,17 +89,9 @@ object Profile {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val t = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.setJobDescription(null)
-        if (attrib) {
-          Thread.sleep(200) // let the async listener bus drain
-          println(f"  [$n rep $i] $t%6.2f s${snapAttrib()}")
-        }
-        // same inter-query hygiene as Bench: drop finished frames so a
-        // rep measures the query, not the previous rep's litter
-        try {
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        } catch { case _: Throwable => () }
+        Thread.sleep(200) // let the async listener bus drain
+        println(f"  [$n rep $i] $t%6.2f s${snapAttrib()}")
+        sweep()
         t
       }
       println(f"$n%-36s " +

@@ -95,6 +95,21 @@ class MedallionSpec extends AnyFunSuite {
     assert(hour10.getAs[String]("aqi_category") === "Very Unhealthy")
   }
 
+  test("A1 canonical values: inexact decimal ties format by the one " +
+    "rule the DuckDB twin shares, not by Java's tie rounding") {
+    // 0.02445 and 12.34565 sit just below their ties in binary: Java's
+    // %.4f gives 0.0245 and 12.3457, DuckDB's printf 0.0244 and 12.3456
+    val tied = Seq(
+      row("2024-01-01 10:05:00", 7L, "co", 12.34565, 30.0, "Good"),
+      row("2024-01-01 10:10:00", 7L, "no2", 0.02445, 40.0, "Good"))
+      .toDF(wireDf.columns.toIndexedSeq: _*)
+    val out = graft.queries.PipelineQueries.goldCanonical(
+      Gold.fromSilver(Silver.fromBronze(Bronze.fromWire(tied)),
+        deterministicArrays = true)).head()
+    assert(out.getAs[String]("parameters") === "co,no2")
+    assert(out.getAs[String]("values") === "12.3456,0.0245")
+  }
+
   test("quirk §2.10-3: an hour with only null-AQI rows yields null aqi") {
     val gold = Gold.fromSilver(Silver.fromBronze(Bronze.fromWire(wireDf)))
     val hour12 = gold.filter(col("datetime") === ts("2024-01-01 12:00:00"))

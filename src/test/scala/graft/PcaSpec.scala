@@ -46,6 +46,18 @@ class PcaSpec extends AnyFunSuite {
     assert(math.abs(norm - 1.0) < 1e-3)
   }
 
+  test("a NULL vector is dropped in both engines: the result equals " +
+    "the data without it") {
+    val rows = (-3 to 3).map(t => Array(t.toFloat, 2f * t, 0f, 1f))
+    val nullRow = Seq((99L, null: Array[Float])).toDF("vec_id", "embedding")
+    def top(df: org.apache.spark.sql.DataFrame) =
+      Pca.topComponent(df, dims = 4, iters = 20).collect().toSeq
+    assert(top(vecs(rows).union(nullRow)) === top(vecs(rows)))
+    // the DuckDB twin filters the same rows before its moment pass
+    assert(Pca.topComponentSql(dims = 4, iters = 20)
+      .split("UNION ALL").forall(_.contains("embedding IS NOT NULL")))
+  }
+
   test("mean-centering: a large constant offset does not change the " +
     "component or eigenvalue") {
     val base = (-3 to 3).map(t => Array(t.toFloat, 0f, 0f, 0f))

@@ -401,4 +401,34 @@ class StreamingSpec extends AnyFunSuite {
       assert(maxPerKey(k) === r.getLong(2))
     }
   }
+
+  test("drain restores shuffle.partitions and deletes its checkpoint " +
+    "directory when the foreachBatch body throws") {
+    implicit val sqlCtx = spark.sqlContext
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    assert(before !== StreamPipeline.StreamParts)
+    val mem = MemoryStream[Int]
+    mem.addData(1, 2, 3)
+    var ckpt: java.nio.file.Path = null
+    var seen = ("", false)
+    val err = intercept[Exception] {
+      StreamPipeline.drain(spark, "graft_drain_spec") { dir =>
+        ckpt = dir
+        StreamPipeline.awaitAvailableNow(mem.toDF().writeStream
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            seen = (b.sparkSession.conf.get(key),
+              java.nio.file.Files.exists(dir))
+            (throw new IllegalStateException("planted batch failure")): Unit
+          }, dir)
+      }
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("planted")))
+    // the batch ran pinned, with its checkpoint on disk; both are undone
+    assert(seen === ((StreamPipeline.StreamParts, true)))
+    assert(spark.conf.get(key) === before)
+    assert(ckpt != null && !java.nio.file.Files.exists(ckpt))
+  }
 }

@@ -5,22 +5,5 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites (Test/fork := true ⇒ single
   * JVM for the test run). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // the eager checkpoint release (util.Checkpoints.free) unpersists
-    // finished-by-design locally-checkpointed rounds; Spark warns per
-    // RDD, flooding suite logs — same suppression Verify/Bench apply
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    s
-  }
+  lazy val spark: SparkSession = Session.build("4")
 }
